@@ -11,13 +11,16 @@ This module is the same contract:
 
 * ``<impressions>``/``<clicks>``: dirs of (junk-prefix-tolerant) JSON-lines.
 * ``<combined>``: written in the reference's job-1 byte format
-  (``0\\t{referrer/x1fadId/x1e<flag>`` lines) for interoperability with
-  tooling that consumed the reference's intermediate — the engine itself
-  does NOT read it back (one DAG, no materialization barrier).
+  (``0\\t{referrer/x1fadId/x1e<flag>`` lines), one line per impressionId
+  (E3: duplicate ids fold to one), for interoperability with tooling that
+  consumed the reference's intermediate — the engine itself does NOT read
+  it back (one DAG, no materialization barrier).
 * ``<output>``: the reference's job-2 text shape ``[url, adID]\\t<ctr>``,
-  with the CTR rendered through float32 shortest-roundtrip formatting to
-  match Java's ``Float.toString`` (the reference computes CTR in 32-bit
-  float, ``ClickThru.java:179-186``).
+  with the CTR rendered by Spark's native ``cast(cast(ctr AS float) AS
+  string)``, which matches Java's ``Float.toString`` (the reference computes
+  CTR in 32-bit float, ``ClickThru.java:179-186``).
+
+Both sinks are written from the one ``operators.clickthru`` pipeline.
 """
 
 from __future__ import annotations
@@ -80,54 +83,32 @@ def main(argv: list[str]) -> int:
         return 1
     impressions, clicks, combined, output = argv
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from hadoopmapreduce_spark.functions.javafmt import java_f32_str
-
-    from hadoopmapreduce_spark.operators.clickthru import (
-        IMPRESSION_SCHEMA,
-        run_clickthru,
-    )
+    from hadoopmapreduce_spark.operators.clickthru import ctr_by_key, flag_impressions
     from hadoopmapreduce_spark.session import get_spark
-    from hadoopmapreduce_spark.sources.jsonlines import read_jsonlines_tolerant
+    from hadoopmapreduce_spark.sources.sinks import write_textkv
 
     spark = get_spark("clickthru-cli")
-
-    # intermediate dir in the reference's job-1 byte format (compat artifact
-    # only — the CTR below is computed from one lazy DAG, not from this file)
-    rows = read_jsonlines_tolerant(spark, impressions, IMPRESSION_SCHEMA).unionByName(
-        read_jsonlines_tolerant(spark, clicks, IMPRESSION_SCHEMA)
-    ).filter(F.col("impressionId").isNotNull())
-    impr = rows.filter(F.col("referrer").isNotNull())
-    clk = rows.filter(F.col("referrer").isNull()).select("impressionId").distinct()
-    flagged = impr.join(
-        clk.withColumn("_c", F.lit(1)), "impressionId", "left"
-    ).select(
+    flagged = flag_impressions(spark, impressions, clicks)
+    flagged.select(
         F.concat(
             F.lit("0\t{"),
             F.col("referrer"),
             F.lit("/x1f"),
             F.col("adId"),
             F.lit("/x1e"),
-            F.when(F.col("_c").isNotNull(), F.lit("1")).otherwise(F.lit("0")),
+            F.col("clicked").cast("string"),
         ).alias("value")
-    )
-    flagged.write.mode("overwrite").text(combined)
+    ).write.mode("overwrite").text(combined)
 
-    result = run_clickthru(spark, impressions, clicks)
-
-    lines = result.select(
-        F.concat(
-            F.lit("["),
-            F.col("referrer"),
-            F.lit(", "),
-            F.col("ad_id"),
-            F.lit("]\t"),
-            java_f32_str(F.col("ctr")),
-        ).alias("value")
-    )
-    lines.write.mode("overwrite").text(output)
-    print(f"CTR written to {output} ({result.count()} groups)")
+    groups = Observation("ctr_groups")
+    ctr = ctr_by_key(flagged).select(
+        "referrer", "ad_id", F.col("ctr").cast("float").cast("string").alias("ctr")
+    ).observe(groups, F.count(F.lit(1)).alias("n"))
+    write_textkv(ctr, ["referrer", "ad_id"], "ctr", output)
+    print(f"CTR written to {output} ({groups.get['n']} groups)")
     return 0
 
 

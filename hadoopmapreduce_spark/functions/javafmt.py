@@ -1,8 +1,10 @@
-"""Java ``Float.toString``-compatible rendering, vectorized.
+"""Java ``Float.toString``-compatible rendering, the reference for tests.
 
 The reference emits the final CTR through 32-bit float ``Float.toString``
-(``ClickThru.java:179-186``), so the CLI's byte-for-byte fidelity mode needs
-Java's exact rendering rule (Float.toString javadoc):
+(``ClickThru.java:179-186``).  The CLI renders it with Spark's native
+``cast(cast(ctr AS float) AS string)``; ``java_float32_repr`` is the
+independent Python statement of Java's rule (Float.toString javadoc) that
+tests hold the cast to:
 
 * ``NaN`` -> ``"NaN"``; infinities -> ``"Infinity"`` / ``"-Infinity"``;
   zeros keep their sign (``"0.0"`` / ``"-0.0"``).
@@ -21,9 +23,6 @@ unique=True)`` — same shortest-repr contract as JDK >= 19's Ryu-based
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
 
 
 def java_float32_repr(x: float) -> str:
@@ -49,12 +48,3 @@ def java_float32_repr(x: float) -> str:
         return f"{sign}{digits[: exp + 1]}.{digits[exp + 1:]}"
     return f"{sign}0.{'0' * (-exp - 1)}{digits}"
 
-
-def java_f32_str(col: Column) -> Column:
-    """Arrow-batched column renderer (no row-at-a-time Python UDF)."""
-
-    @pandas_udf("string")
-    def _render(s: pd.Series) -> pd.Series:
-        return s.map(java_float32_repr)
-
-    return _render(col)

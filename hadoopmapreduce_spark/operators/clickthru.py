@@ -12,7 +12,8 @@ packing (``"/x1f"``/``"/x1e"``, ``ClickThru.java:116,148``), and the
 grouped mean gets map-side partial aggregation the reference never had.
 
 Fidelity decisions (SURVEY.md §2.3):
-  E1 malformed JSON  → null fields + corrupt counter (not stale-value reuse)
+  E1 malformed JSON  → null fields + corrupt counter (not stale-value reuse);
+                       an impression without an adId is dropped as malformed
   E2 N clicks        → counted once (DISTINCT before join) — preserved
   E3 duplicate ids   → one row per id, deterministic max-payload (not
                        last-write-wins in reduce iteration order)
@@ -36,13 +37,13 @@ IMPRESSION_SCHEMA = T.StructType(
 )
 
 
-def run_clickthru(
+def flag_impressions(
     spark: SparkSession, impressions_path: str, clicks_path: str
 ) -> DataFrame:
-    """CTR per (referrer, ad_id) from JSON-lines impression/click dirs.
+    """One row per impressionId: (impressionId, referrer, adId, clicked 0/1).
 
-    Result schema: (referrer string, ad_id string, ctr double) — the typed
-    form of the reference's ``[url, adID]\\t<float>`` text lines.
+    The typed form of the reference's job-1 output (the ``combined`` dir),
+    with E1-E4 applied.
     """
     # The reference feeds BOTH dirs to one mapper and sniffs provenance per
     # record by probing for a `referrer` key (ClickThru.java:111).  We read
@@ -53,9 +54,10 @@ def run_clickthru(
     ).unionByName(read_jsonlines_tolerant(spark, clicks_path, IMPRESSION_SCHEMA))
 
     rows = all_rows.filter(F.col("impressionId").isNotNull())
-    impressions = rows.filter(F.col("referrer").isNotNull()).select(
-        "impressionId", "referrer", "adId"
-    )
+    # E1: an impression without an adId is malformed — it has no CTR key
+    impressions = rows.filter(
+        F.col("referrer").isNotNull() & F.col("adId").isNotNull()
+    ).select("impressionId", "referrer", "adId")
     # E3: duplicate impressionIds fold to one deterministic payload
     impressions = impressions.groupBy("impressionId").agg(
         F.max(F.struct("referrer", "adId")).alias("p")
@@ -64,13 +66,25 @@ def run_clickthru(
     clicks = (
         rows.filter(F.col("referrer").isNull()).select("impressionId").distinct()
     )
+    # E4: the left join drops clicks whose impression never appeared
+    return impressions.join(
+        clicks.withColumn("clicked", F.lit(1)), "impressionId", "left"
+    ).select("impressionId", "referrer", "adId", F.coalesce("clicked", F.lit(0)).alias("clicked"))
 
-    flagged = impressions.join(
-        clicks.withColumn("has_click", F.lit(1)), "impressionId", "left"
-    ).withColumn(
-        "clicked",
-        F.when(F.col("has_click").isNotNull(), F.lit(1.0)).otherwise(F.lit(0.0)),
-    )
+
+def ctr_by_key(flagged: DataFrame) -> DataFrame:
+    """Job 2: the mean click flag per (referrer, ad_id) as ``ctr`` double."""
     return flagged.groupBy(
         F.col("referrer"), F.col("adId").alias("ad_id")
     ).agg(F.avg("clicked").alias("ctr"))
+
+
+def run_clickthru(
+    spark: SparkSession, impressions_path: str, clicks_path: str
+) -> DataFrame:
+    """CTR per (referrer, ad_id) from JSON-lines impression/click dirs.
+
+    Result schema: (referrer string, ad_id string, ctr double) — the typed
+    form of the reference's ``[url, adID]\\t<float>`` text lines.
+    """
+    return ctr_by_key(flag_impressions(spark, impressions_path, clicks_path))

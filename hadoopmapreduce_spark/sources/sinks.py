@@ -15,10 +15,10 @@ from pyspark.sql import functions as F
 def write_textkv(df: DataFrame, key_cols: list[str], value_col: str, path: str) -> None:
     """Write the reference's ``[k1, k2]\\tvalue`` text shape.
 
-    The value column must already be a string (callers fixed-point floats
-    first — float rendering is engine-specific, see operators/ctr.py
-    sink_textkv).  Single text column → ``.write.text`` keeps the sink
-    splittable and parallel; no coalesce(1) — at scale one-file output is an
+    The value column is cast to string as is; the CLI passes
+    ``cast(cast(ctr AS float) AS string)``, Java's ``Float.toString`` form
+    (pinned by ``tests/test_cli.py``).  Single text column → ``.write.text``
+    keeps the sink splittable and parallel; no coalesce(1) — at scale one-file output is an
     anti-pattern, downstream readers glob the directory exactly as Hadoop's
     TextInputFormat did."""
     key = F.concat(

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _fixture(tmp_path):
@@ -19,6 +22,20 @@ def _fixture(tmp_path):
     )
     (clk / "part-0000").write_text('{"impressionId": "i1"}\n')
     return imp, clk
+
+
+def _run_cli(*args):
+    return subprocess.run(
+        [sys.executable, "-m", "hadoopmapreduce_spark", *map(str, args)],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        timeout=300,
+    )
+
+
+def _lines(path):
+    return [line for f in sorted(path.glob("part-*")) for line in f.read_text().splitlines()]
 
 
 def test_cli_usage_error():
@@ -52,57 +69,105 @@ def test_java_float_rendering_golden():
 
 
 def test_java_float_rendering_column(spark):
+    """The CLI's native ``cast(cast(x AS float) AS string)`` renders exactly
+    as Java's Float.toString: golden values, every k/n CTR for n <= 300, and
+    a seeded sample of float32 bit patterns in [0, 1]."""
+    import numpy as np
+    import pandas as pd
     from pyspark.sql import functions as F
 
-    from hadoopmapreduce_spark.functions.javafmt import java_f32_str
+    from hadoopmapreduce_spark.functions.javafmt import java_float32_repr
 
-    df = spark.createDataFrame(
-        [(0.5,), (0.0001,), (1 / 4096,), (0.0,)], ["ctr"]
-    ).select(java_f32_str(F.col("ctr")).alias("s"))
-    assert [row.s for row in df.orderBy("s").collect()] == [
-        "0.0", "0.5", "1.0E-4", "2.4414062E-4"
+    golden = [0.0, 0.5, 1.0e-4, 1 / 4096, 1.0e7, 9999999.0]
+    ratios = [k / n for n in range(1, 301) for k in range(n + 1)]
+    bits = np.random.default_rng(20240).integers(
+        0, 0x3F800000, size=50_000, endpoint=True, dtype=np.uint32
+    )
+    sampled = bits.view(np.float32).astype(np.float64).tolist()
+    xs = golden + ratios + sampled
+    df = spark.createDataFrame(pd.DataFrame({"i": range(len(xs)), "x": xs}))
+    got = [
+        r.s
+        for r in df.select(
+            "i", F.col("x").cast("float").cast("string").alias("s")
+        ).orderBy("i").collect()
     ]
+    assert got[: len(golden)] == [
+        "0.0", "0.5", "1.0E-4", "2.4414062E-4", "1.0E7", "9999999.0"
+    ]
+    mismatches = [
+        (x, s) for x, s in zip(xs, got) if s != java_float32_repr(x)
+    ]
+    assert mismatches == [], mismatches[:5]
 
 
 def test_cli_end_to_end(tmp_path):
     imp, clk = _fixture(tmp_path)
     combined = tmp_path / "combined"
     output = tmp_path / "out"
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "hadoopmapreduce_spark",
-            str(imp),
-            str(clk),
-            str(combined),
-            str(output),
-        ],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-        timeout=300,
-    )
+    proc = _run_cli(imp, clk, combined, output)
     assert proc.returncode == 0, proc.stderr[-2000:]
 
-    out_lines = sorted(
-        line
-        for f in output.glob("part-*")
-        for line in f.read_text().splitlines()
-    )
-    assert out_lines == ["[u1, a1]\t0.5", "[u2, a2]\t0.0"]
-
-    combined_lines = sorted(
-        line
-        for f in combined.glob("part-*")
-        for line in f.read_text().splitlines()
-    )
+    assert sorted(_lines(output)) == ["[u1, a1]\t0.5", "[u2, a2]\t0.0"]
+    combined_lines = sorted(_lines(combined))
     # the reference's job-1 byte format: 0\t{url/x1fadId/x1e<flag>
     assert combined_lines == [
         "0\t{u1/x1fa1/x1e0",
         "0\t{u1/x1fa1/x1e1",
         "0\t{u2/x1fa2/x1e0",
     ]
+
+
+def test_cli_combined_is_job1_of_output(tmp_path):
+    """``<combined>`` holds one line per distinct valid impressionId (E3),
+    and averaging its flags per (referrer, adId) gives exactly ``<output>``;
+    an impression with no adId reaches neither sink (E1)."""
+    from collections import defaultdict
+
+    from hadoopmapreduce_spark.functions.javafmt import java_float32_repr
+
+    imp = tmp_path / "impressions"
+    clk = tmp_path / "clicks"
+    imp.mkdir()
+    clk.mkdir()
+    (imp / "part-0000").write_text(
+        '{"impressionId": "i1", "referrer": "u1", "adId": "a1"}\n'
+        'junk\t{"impressionId": "i2", "referrer": "u1", "adId": "a1"}\n'
+        '{"impressionId": "i3", "referrer": "u1", "adId": "a1"}\n'
+        '{"impressionId": "i4", "referrer": "u1", "adId": "a1"}\n'
+        '{"impressionId": "i4", "referrer": "u2", "adId": "a9"}\n'  # E3
+        '{"impressionId": "i5", "referrer": "u2", "adId": "a9"}\n'
+        '{"impressionId": "i6", "referrer": "u3"}\n'  # no adId
+        "this is not json at all\n"  # E1
+    )
+    (clk / "part-0000").write_text(
+        '{"impressionId": "i1"}\n'
+        '{"impressionId": "i4"}\n'
+        '{"impressionId": "i4"}\n'  # E2: double click
+        '{"impressionId": "i6"}\n'
+        '{"impressionId": "i999"}\n'  # E4: orphan
+    )
+    combined, output = tmp_path / "combined", tmp_path / "out"
+    proc = _run_cli(imp, clk, combined, output)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+    combined_lines, out_lines = _lines(combined), _lines(output)
+    assert "" not in combined_lines and "" not in out_lines
+    # i1..i5: i4 once, i6 (no adId) and the malformed line dropped
+    assert len(combined_lines) == 5
+    flags = defaultdict(list)
+    for line in combined_lines:
+        assert line.startswith("0\t{")
+        key, _, flag = line[3:].partition("/x1e")
+        referrer, _, ad = key.partition("/x1f")
+        flags[(referrer, ad)].append(int(flag))
+    from_combined = sorted(
+        f"[{r}, {a}]\t{java_float32_repr(sum(v) / len(v))}"
+        for (r, a), v in flags.items()
+    )
+    assert sorted(out_lines) == from_combined
+    assert from_combined == ["[u1, a1]\t0.33333334", "[u2, a9]\t0.5"]
+    assert "(2 groups)" in proc.stdout
 
 
 def test_cli_list_subcommand():

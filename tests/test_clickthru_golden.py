@@ -50,6 +50,34 @@ def test_golden_ctr(spark, fixture_dirs):
     assert result == {("u1", "a1"): 0.5, ("u2", "a1"): 0.0}
 
 
+def test_impression_without_adid_is_malformed(spark, fixture_dirs):
+    """E1: an impression with a referrer but no adId is dropped before E3,
+    so it forms no (referrer, null) group and does not displace a valid
+    duplicate of its impressionId."""
+    from pathlib import Path
+
+    from hadoopmapreduce_spark.operators.clickthru import flag_impressions, run_clickthru
+
+    imp_dir, clk_dir = fixture_dirs
+    (Path(imp_dir) / "part-0001").write_text(
+        '{"impressionId": "i6", "referrer": "u3"}\n'
+        '{"impressionId": "i5", "referrer": "u9", "adId": null}\n'
+    )
+    result = {
+        (r["referrer"], r["ad_id"]): r["ctr"]
+        for r in run_clickthru(spark, imp_dir, clk_dir).collect()
+    }
+    assert result == {("u1", "a1"): 0.5, ("u2", "a1"): 0.0}
+    flagged = sorted(tuple(r) for r in flag_impressions(spark, imp_dir, clk_dir).collect())
+    assert flagged == [
+        ("i1", "u1", "a1", 1),
+        ("i2", "u1", "a1", 1),
+        ("i3", "u1", "a1", 0),
+        ("i4", "u1", "a1", 0),
+        ("i5", "u2", "a1", 0),
+    ]
+
+
 def test_corrupt_line_quarantined(spark, fixture_dirs):
     from hadoopmapreduce_spark.operators.clickthru import IMPRESSION_SCHEMA
     from hadoopmapreduce_spark.sources.jsonlines import read_jsonlines_tolerant
