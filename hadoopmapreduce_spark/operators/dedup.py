@@ -215,26 +215,91 @@ def _affine_coeff(i: int, which: str, p: int) -> int:
 MINHASH_P = 2147483647  # 2^31 - 1
 
 
-def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_shingles, h0..h71) — the 72-way minhash signature.
+def _minhash_coeffs() -> list[tuple[int, int]]:
+    """The k = r*b affine pairs (a_i, b_i) of the minhash family."""
+    k = MINHASH_ROWS_PER_BAND * MINHASH_BANDS
+    p = MINHASH_P
+    return [(_affine_coeff(i, "a", p), _affine_coeff(i, "b", p)) for i in range(k)]
+
+
+def _minhash_sig(sh: DataFrame) -> DataFrame:
+    """(doc_id, h0..h71) — the 72-way minhash signature of the (doc_id, s)
+    shingle frame ``sh``.
 
     One xxhash64 string hash per shingle, then k cheap affine transforms
     h_i = (a_i*h + b_i) mod p (the classic universal family) — ~k× less
     string-hashing work than k independent seeded xxhash calls, same
     min-stability guarantees.  All arithmetic stays < 2^62 (p² < 2^62), so
-    ANSI int64 never overflows."""
-    sh = _shingles(spark, sf_dir)
-    k = MINHASH_ROWS_PER_BAND * MINHASH_BANDS
+    ANSI int64 never overflows.
+
+    The 72 mins are one generated SQL statement with the coefficients
+    inlined as BIGINT literals: Spark parses it in one call, where each
+    min assembled from Column objects costs dozens of py4j round trips."""
     p = MINHASH_P
-    base = F.pmod(F.xxhash64(F.col("s")), F.lit(p))
-    coeffs = [(_affine_coeff(i, "a", p), _affine_coeff(i, "b", p)) for i in range(k)]
-    hashed = sh.withColumn("h", base)
-    return hashed.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        *[
-            F.min(F.pmod(F.col("h") * F.lit(a) + F.lit(b), F.lit(p))).alias(f"h{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ],
+    mins = ", ".join(
+        f"min(pmod(h * {a}L + {b}L, {p}L)) AS h{i}"
+        for i, (a, b) in enumerate(_minhash_coeffs())
+    )
+    return sh.sparkSession.sql(
+        f"SELECT doc_id, {mins} "
+        f"FROM (SELECT doc_id, pmod(xxhash64(s), {p}L) AS h FROM {{sh}}) "
+        "GROUP BY doc_id",
+        sh=sh,
+    )
+
+
+def _inline_bands(df: DataFrame, n_bands: int, key, *keep: str) -> DataFrame:
+    """One row per (document, band): the ``keep`` columns, ``band_id`` and
+    the band's key fields, where ``key(b)`` is band b's comma-separated
+    ``'name', expr`` pairs.  All bands are one ``inline(array(named_struct
+    ...))`` SQL expression."""
+    structs = ", ".join(
+        f"named_struct('band_id', {b}, {key(b)})" for b in range(n_bands)
+    )
+    return df.selectExpr("doc_id", *keep, f"inline(array({structs}))")
+
+
+def _band_rows(b: int) -> list[str]:
+    """The signature columns of minhash band b."""
+    r = MINHASH_ROWS_PER_BAND
+    return [f"h{b * r + i}" for i in range(r)]
+
+
+def _band_candidates(banded: DataFrame, *keys: str) -> DataFrame:
+    """(doc_a, doc_b) with doc_a < doc_b: the distinct document pairs that
+    share a band, i.e. agree on ``band_id`` and every column in ``keys``."""
+    on = " AND ".join(f"a.{k} = b.{k}" for k in ("band_id", *keys))
+    return banded.sparkSession.sql(
+        "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b "
+        f"FROM {{banded}} a JOIN {{banded}} b ON {on} AND a.doc_id < b.doc_id",
+        banded=banded,
+    )
+
+
+def _verified_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the candidate pairs ``cand`` whose exact
+    shingle Jaccard reaches JACCARD_THRESHOLD.
+
+    Each document's shingle set is gathered once (``sh`` holds distinct
+    shingles per document, so the list is a set) and the intersection is
+    counted on the candidate pair itself: the same integers as joining
+    the per-shingle rows to every candidate and regrouping them, in one
+    shuffle round fewer."""
+    return sh.sparkSession.sql(
+        f"""
+        WITH ss AS (SELECT doc_id, collect_list(s) AS ss FROM {{sh}} GROUP BY doc_id),
+        counted AS (
+          SELECT c.doc_a, c.doc_b, size(array_intersect(a.ss, b.ss)) AS c,
+                 size(a.ss) AS na, size(b.ss) AS nb
+          FROM {{cand}} c
+          JOIN ss a ON a.doc_id = c.doc_a
+          JOIN ss b ON b.doc_id = c.doc_b)
+        SELECT doc_a, doc_b, CAST(c AS DOUBLE) / (na + nb - c) AS jaccard
+        FROM counted
+        WHERE CAST(c AS DOUBLE) / (na + nb - c) >= {JACCARD_THRESHOLD}
+        """,
+        sh=sh,
+        cand=cand,
     )
 
 
@@ -242,68 +307,27 @@ def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures + LSH banding + exact verification.
 
-    shingle → 72 xxhash64 minhashes per doc (one groupBy) → 24 bands of 3 →
-    explode bands → self-equi-join on (band_id, band_hash) → exact Jaccard
-    check on the candidate pairs only.
+    shingle → 72 minhashes per doc (one groupBy) → 24 bands of 3, each
+    keyed on the xxhash64 of its 3 minhashes → self-equi-join on
+    (band_id, band_hash) → exact Jaccard of the candidate pairs only, by
+    intersecting the two documents' shingle sets.
 
     This is the 100 TB near-dup shape: every join key is a fixed-width band
     hash, fan-out per bucket is bounded by collision probability (not by
-    document frequency), and the expensive exact verification runs only on
+    document frequency), and the exact verification runs only on
     candidates.  Because verification is exact and the banding parameters
     put recall at ~1-1e-13 for the fixture's ≥0.9-Jaccard duplicates, the
     output equals the exact-pairs oracle (same SQL twin as
-    ngram_jaccard_pairs)."""
+    ngram_jaccard_pairs).  The signature, the bands and the verification
+    are generated SQL, so building the plan costs a few hundred py4j round
+    trips and starts no Spark job."""
     sh = _shingles(spark, sf_dir)
-    sig = _minhash_sig(spark, sf_dir)
-    # band hash = xxhash of the r minhashes in the band
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band_id"),
-                F.xxhash64(
-                    *[
-                        F.col(f"h{band * MINHASH_ROWS_PER_BAND + r}")
-                        for r in range(MINHASH_ROWS_PER_BAND)
-                    ]
-                ).alias("band_hash"),
-            )
-            for band in range(MINHASH_BANDS)
-        ]
+    banded = _inline_bands(
+        _minhash_sig(sh),
+        MINHASH_BANDS,
+        lambda b: f"'band_hash', xxhash64({', '.join(_band_rows(b))})",
     )
-    banded = sig.select(
-        "doc_id", F.explode(bands).alias("bnd")
-    ).select("doc_id", F.col("bnd.band_id").alias("band_id"), F.col("bnd.band_hash").alias("band_hash"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # exact verification restricted to candidates
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s"))
-    inter = (
-        candidates.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _verified_pairs(_band_candidates(banded, "band_hash"), sh)
 
 
 # --------------------------------------------------------------------------
@@ -373,11 +397,12 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Stays entirely in codegen: the token hash is the first 12 md5 nibbles
     as a 48-bit integer (bit-identical in Spark and DuckDB — the same
-    engine-portable trick as sample_split_train_val_test; this replaced
-    xxhash64 in round 5 and promoted the query from rows-only to a full
-    row+schema+hash oracle), bit votes are 48 conditional sums in one
+    engine-portable trick as sample_split_train_val_test — so the query
+    has a full DuckDB twin), bit votes are 48 conditional sums in one
     groupBy, and the band join is equi — the same bounded-fan-out property
-    as MinHash-LSH.  Fingerprints are localCheckpoint-ed before the
+    as MinHash-LSH.  The vote sums, the fingerprint and the band structs
+    are generated SQL expressions, as in the MinHash path, so the plan
+    builds in a few hundred py4j round trips.  Fingerprints are localCheckpoint-ed before the
     self-join: without it both join sides re-run the tokenize+48-sum
     aggregation (ReuseExchange doesn't always fire across the band
     explode), and at scale the fingerprint table is ~#docs rows of
@@ -391,38 +416,23 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.col("text"), r"\s+")).alias("tok")
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("w"))
-    h = F.conv(
-        F.substring(F.md5(F.col("tok").cast("binary")), 1, 12), 16, 10
-    ).cast("long")
-    votes = tf.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, F.col("w"))
-                .otherwise(-F.col("w"))
-            ).alias(f"v{bit}")
-            for bit in range(SIMHASH_BITS)
-        ]
+    votes = ", ".join(
+        f"sum(CASE WHEN shiftright(h, {bit}) & 1 = 1 THEN w ELSE -w END) AS v{bit}"
+        for bit in range(SIMHASH_BITS)
     )
-    fp = None
-    for bit in range(SIMHASH_BITS):
-        term = F.when(F.col(f"v{bit}") > 0, F.lit(2 ** bit).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        fp = term if fp is None else fp + term
-    fps = votes.select("doc_id", fp.alias("fp")).localCheckpoint(eager=False)
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band_id"),
-                F.shiftright(F.col("fp"), i * SIMHASH_BAND_BITS)
-                .bitwiseAND(F.lit((1 << SIMHASH_BAND_BITS) - 1))
-                .alias("band_val"),
-            )
-            for i in range(SIMHASH_BANDS)
-        ]
-    )
-    banded = fps.select("doc_id", "fp", F.explode(band_arr).alias("bnd")).select(
-        "doc_id", "fp", F.col("bnd.band_id").alias("band_id"), F.col("bnd.band_val").alias("band_val")
+    fp = " + ".join(f"IF(v{bit} > 0, {1 << bit}L, 0L)" for bit in range(SIMHASH_BITS))
+    fps = spark.sql(
+        f"SELECT doc_id, {fp} AS fp FROM (SELECT doc_id, {votes} FROM ("
+        "SELECT doc_id, w, CAST(conv(substring(md5(CAST(tok AS BINARY)), 1, 12),"
+        " 16, 10) AS BIGINT) AS h FROM {tf}) GROUP BY doc_id)",
+        tf=tf,
+    ).localCheckpoint(eager=False)
+    mask = (1 << SIMHASH_BAND_BITS) - 1
+    banded = _inline_bands(
+        fps,
+        SIMHASH_BANDS,
+        lambda b: f"'band_val', shiftright(fp, {b * SIMHASH_BAND_BITS}) & {mask}",
+        "fp",
     )
     a = banded.alias("a")
     b = banded.alias("b")
@@ -1013,23 +1023,15 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _band_tuples(sig: DataFrame) -> DataFrame:
     """(doc_id, band_id, m1, m2, m3) — one row per LSH band keyed on the
-    band's minhash TUPLE (exact banding semantics; no band-key hash)."""
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.col(f"h{3 * b}").alias("m1"),
-                        F.col(f"h{3 * b + 1}").alias("m2"),
-                        F.col(f"h{3 * b + 2}").alias("m3"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bnd"),
-    ).select("doc_id", "bnd.band_id", "bnd.m1", "bnd.m2", "bnd.m3")
+    band's minhash tuple itself (exact banding semantics, no band-key
+    hash); the same single inline-bands expression as minhash_lsh_dedup."""
+    return _inline_bands(
+        sig,
+        MINHASH_BANDS,
+        lambda b: ", ".join(
+            f"'m{i + 1}', {h}" for i, h in enumerate(_band_rows(b))
+        ),
+    )
 
 
 def _minhash_eval_oracle() -> str:
@@ -1044,14 +1046,12 @@ def _minhash_eval_oracle() -> str:
     from hadoopmapreduce_spark.functions import xxh64_sql as X
 
     p = MINHASH_P
-    k = MINHASH_ROWS_PER_BAND * MINHASH_BANDS
-    coeffs = [(_affine_coeff(i, "a", p), _affine_coeff(i, "b", p)) for i in range(k)]
     steps: list[tuple[str, str]] = []
     hs = X.hash_string_steps(steps, "s", "42::HUGEINT", "sh")
     steps.append(("shh", f"(({X.signed_col(hs)}) % {p} + {p}) % {p}"))
     mins = ",\n             ".join(
         f"MIN((shh * {a} + {b}) % {p}) AS h{i}"
-        for i, (a, b) in enumerate(coeffs)
+        for i, (a, b) in enumerate(_minhash_coeffs())
     )
     sh_sql = r"""SELECT doc_id, s FROM (
       SELECT DISTINCT doc_id, ts[i.i] || ' ' || ts[i.i+1] || ' ' || ts[i.i+2] AS s
@@ -1108,9 +1108,8 @@ def dedup_minhash_eval(
     itself is pinned bit-exact by fn_xxhash64_suite), and it lets the
     DuckDB twin adjudicate the candidate SET exactly: this oracle
     recomputes the per-shingle xxhash64 via the SQL port, the 72 affine
-    mins, the banding, the candidate join, and the truth join — the first
-    fully candidate-level cross-engine check of the LSH path (previously
-    verified through its post-verification OUTPUT only).
+    mins, the banding, the candidate join, and the truth join — a
+    candidate-level cross-engine check of the LSH path.
 
     Output is one row: candidate/truth/hit counts plus precision and
     recall in integer ppm (floor division; NULL-guarded).  At the fixture
@@ -1120,26 +1119,13 @@ def dedup_minhash_eval(
     ``audit_fraction`` (default 1.0 = the registered, oracle-adjudicated
     form) restricts BOTH sides to the same deterministic doc sample
     before the quadratic truth join — the executable at-100 TB audit
-    posture (VERDICT r9 ask #7): run the tuning audit on a sample, not
-    the corpus."""
-    banded = _band_tuples(_minhash_sig(spark, sf_dir))
+    posture: run the tuning audit on a sample, not the corpus."""
+    banded = _band_tuples(_minhash_sig(_shingles(spark, sf_dir)))
     if audit_fraction < 1.0:
         banded = banded.filter(
             _audit_sample(F.col("doc_id"), audit_fraction)
         )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.m1") == F.col("b.m1"))
-            & (F.col("a.m2") == F.col("b.m2"))
-            & (F.col("a.m3") == F.col("b.m3"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_candidates(banded, "m1", "m2", "m3")
     truth = ngram_jaccard_pairs(spark, sf_dir, audit_fraction).select(
         "doc_a", "doc_b"
     )
@@ -1226,9 +1212,8 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     bh = d.filter(~delta_ids).select(h.alias("h")).distinct()
     exact = dh.join(bh, "h", "left_semi").select("doc_id")
 
-    bands = _band_tuples(_minhash_sig(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
+    bands = _band_tuples(_minhash_sig(sh)).localCheckpoint(eager=False)
     bd = bands.filter(delta_ids)
     bb = bands.filter(~delta_ids)
     cand = (
@@ -1240,36 +1225,15 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("d.m2") == F.col("b.m2"))
             & (F.col("d.m3") == F.col("b.m3")),
         )
-        .select(F.col("d.doc_id").alias("did"), F.col("b.doc_id").alias("bid"))
+        .select(F.col("d.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("did"), "s"), "did")
-        .join(sh.select(F.col("doc_id").alias("bid"), "s"), ["bid", "s"])
-        .groupBy("did", "bid")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    jac = F.col("c").cast("double") / (F.col("nd") + F.col("nb") - F.col("c"))
-    near = (
-        inter.join(cnt.select(F.col("doc_id").alias("did"), F.col("n").alias("nd")), "did")
-        .join(cnt.select(F.col("doc_id").alias("bid"), F.col("n").alias("nb")), "bid")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("did")
-        .distinct()
-    )
+    near = _verified_pairs(cand, sh).select(F.col("doc_a").alias("doc_id")).distinct()
     statuses = (
         d.filter(delta_ids)
         .select("doc_id")
         .join(exact.withColumn("is_exact", F.lit(1)), "doc_id", "left")
-        .join(
-            near.select(F.col("did").alias("doc_id")).withColumn(
-                "is_near", F.lit(1)
-            ),
-            "doc_id",
-            "left",
-        )
+        .join(near.withColumn("is_near", F.lit(1)), "doc_id", "left")
         .select(
             "doc_id",
             F.when(F.col("is_exact") == 1, "exact_dup")

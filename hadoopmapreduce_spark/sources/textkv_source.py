@@ -305,16 +305,30 @@ class TextKVCommit(WriterCommitMessage):
     rows: int
 
 
-def _stage_batches(staging: str, iterator) -> TextKVCommit:
+def _discard(staging: str) -> None:
+    """Remove a staging dir for good: rename it away (atomic), then delete
+    the renamed tree.  A task opening its staged file after the rename
+    fails, so the tree being deleted cannot gain an entry."""
+    doomed = f"{staging}.discard-{uuid.uuid4().hex}"
+    try:
+        os.rename(staging, doomed)
+    except FileNotFoundError:
+        return
+    shutil.rmtree(doomed, ignore_errors=True)
+
+
+def _stage_batches(staging: str, iterator, create: bool) -> TextKVCommit:
     """Executor-side shared path for BOTH writers: render each Arrow batch
     to ``key\\tvalue\\n`` lines vectorized and stream the bytes to one
-    attempt-unique staged file under ``staging``."""
+    attempt-unique staged file under ``staging`` (made here iff ``create``;
+    otherwise its absence means the job was aborted and the open fails)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark import TaskContext
 
     ctx = TaskContext.get()
-    os.makedirs(staging, exist_ok=True)
+    if create:
+        os.makedirs(staging, exist_ok=True)
     staged = os.path.join(
         staging,
         f"task-{ctx.partitionId():05d}-attempt-{ctx.taskAttemptId()}",
@@ -394,7 +408,8 @@ class TextKVWriter(DataSourceArrowWriter):
       the staged files to ``part-NNNNN`` in deterministic order and drops a
       ``_SUCCESS`` marker; rename-into-place is atomic per file on POSIX;
     * ``abort`` removes the whole staging directory, leaving any prior
-      committed output untouched.
+      committed output untouched.  Only the driver creates it (at
+      planning), so a straggling task of an aborted job writes nothing.
 
     Same CONTRACT as the reader: local/shared-POSIX paths only (executors
     ``open()`` the staged files, the driver renames them)."""
@@ -405,13 +420,14 @@ class TextKVWriter(DataSourceArrowWriter):
             raise ValueError("textkv writer requires a path")
         self.path = path
         self.overwrite = overwrite
-        # job-level staging dir, fixed at planning time on the driver so
+        # job-level staging dir, made at planning time on the driver so
         # every task of this job (including retries) stages under one root
         self.staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
+        os.makedirs(self.staging)
 
     # executor-side
     def write(self, iterator) -> TextKVCommit:
-        return _stage_batches(self.staging, iterator)
+        return _stage_batches(self.staging, iterator, create=False)
 
     # driver-side
     def commit(self, messages) -> None:
@@ -438,12 +454,12 @@ class TextKVWriter(DataSourceArrowWriter):
         staged = sorted(m.staged for m in messages if m is not None)
         for i, src in enumerate(staged):
             os.replace(src, os.path.join(self.path, f"part-{base + i:05d}"))
-        shutil.rmtree(self.staging, ignore_errors=True)
+        _discard(self.staging)
         with open(os.path.join(self.path, "_SUCCESS"), "w", encoding="utf-8"):
             pass
 
     def abort(self, messages) -> None:
-        shutil.rmtree(self.staging, ignore_errors=True)
+        _discard(self.staging)
 
 
 class TextKVStreamWriter(DataSourceStreamArrowWriter):
@@ -472,6 +488,10 @@ class TextKVStreamWriter(DataSourceStreamArrowWriter):
       earlier CRASHED runs (epochs are sequential, so any staging dir
       present at commit time is garbage).
 
+    Tasks create their staging dir (the streaming API has no driver hook
+    before an epoch), so a straggler of an aborted epoch can recreate it;
+    readers never see that orphan and the next commit or abort removes it.
+
     Epoch part files carry the same ``part-`` prefix the batch reader
     globs, so a finished stream's directory round-trips through
     ``spark.read.format("textkv")`` unchanged.  Same local/shared-POSIX
@@ -495,7 +515,7 @@ class TextKVStreamWriter(DataSourceStreamArrowWriter):
 
     # executor-side, once per task per micro-batch
     def write(self, iterator) -> TextKVCommit:
-        return _stage_batches(self.staging, iterator)
+        return _stage_batches(self.staging, iterator, create=True)
 
     def _cleanup(self) -> None:
         # Epochs execute sequentially and this runs driver-side strictly
@@ -504,7 +524,7 @@ class TextKVStreamWriter(DataSourceStreamArrowWriter):
         # leaving only failed-attempt strays) or a leftover from a CRASHED
         # earlier run — both are garbage; GC them all.
         for d in glob.glob(os.path.join(self.path, "_stream-staging-*")):
-            shutil.rmtree(d, ignore_errors=True)
+            _discard(d)
 
     # driver-side, once per successful micro-batch
     def commit(self, messages, batchId: int) -> None:

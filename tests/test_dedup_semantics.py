@@ -50,10 +50,57 @@ def test_minhash_finds_near_dup(spark, monkeypatch):
     assert all(2 not in p for p in pairs)
 
 
+def test_minhash_build_is_cheap(spark, monkeypatch):
+    """Building minhash_lsh_dedup's plan costs a bounded number of py4j
+    round trips (its wide signature, band and verification expressions are
+    generated SQL; assembled Column by Column they took ~8,000) and starts
+    no Spark job."""
+    import hadoopmapreduce_spark.operators.dedup as dd
+    from py4j.clientserver import ClientServerConnection
+
+    docs = _docs(spark, [BASE, NEAR, FAR])
+    monkeypatch.setattr(
+        "hadoopmapreduce_spark.operators.dedup.load_table",
+        lambda spark_, sf_dir, name: docs,
+    )
+    send = ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    sc = spark.sparkContext
+    group = "test-minhash-build"
+    sc.setJobGroup(group, group)
+    try:
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        dd.minhash_lsh_dedup(spark, "x")
+        monkeypatch.setattr(ClientServerConnection, "send_command", send)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert calls[0] <= 1500, calls[0]
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_minhash_matches_exact_jaccard(spark, monkeypatch):
+    """The LSH path's verification (shingle-set intersection per candidate
+    pair) gives the exact Jaccard; the last two documents repeat their
+    shingles, so only set semantics give their 3-of-4 = 0.75."""
     import hadoopmapreduce_spark.operators.dedup as dd
 
-    docs = _docs(spark, [BASE, NEAR, FAR, BASE + " extra tail tokens appended"])
+    docs = _docs(
+        spark,
+        [
+            BASE,
+            NEAR,
+            FAR,
+            BASE + " extra tail tokens appended",
+            "a b c a b c a b c",
+            "a b c a b c a b d",
+        ],
+    )
     monkeypatch.setattr(
         "hadoopmapreduce_spark.operators.dedup.load_table",
         lambda spark_, sf_dir, name: docs,
@@ -67,6 +114,7 @@ def test_minhash_matches_exact_jaccard(spark, monkeypatch):
         for r in dd.minhash_lsh_dedup(spark, "x").collect()
     }
     assert exact == lsh
+    assert lsh[(4, 5)] == 0.75
 
 
 def test_simhash_near_vs_far(spark, monkeypatch):

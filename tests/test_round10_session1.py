@@ -252,18 +252,24 @@ def test_multiprobe_assignment_is_shuffle_free(spark):
     """Same pin as the single-probe assignment (VERDICT r8 ask #3): the
     top-2 runs as in-row folds over the 1-row broadcast centroid array —
     no corpus-side exchange, no window; the only hashpartitioning is the
-    cluster-keyed exchange into the pair kernel."""
+    cluster-keyed exchange into the pair kernel.
+
+    The query reads its probe table through a localCheckpoint, so its own
+    plan shows a checkpoint scan where the assignment was; the assignment
+    it checkpoints is pinned on its own plan."""
     from hadoopmapreduce_spark.operators.dedup import (
         dedup_semantic_multiprobe,
+        semantic_assignment_multiprobe,
     )
     from hadoopmapreduce_spark.plans.explain import physical_plan
 
-    plan = physical_plan(
-        dedup_semantic_multiprobe(spark, "/root/testdata/sf0.001")
-    )
-    assert "hashpartitioning(vec_id" not in plan, plan
-    assert "Window" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    sf_dir = "/root/testdata/sf0.001"
+    assign = physical_plan(semantic_assignment_multiprobe(spark, sf_dir))
+    plan = physical_plan(dedup_semantic_multiprobe(spark, sf_dir))
+    for p in (assign, plan):
+        assert "hashpartitioning(vec_id" not in p, p
+        assert "Window" not in p, p
+    assert "BroadcastNestedLoopJoin" in assign, assign  # centroids broadcast
     assert "hashpartitioning(cluster" in plan, plan  # the kernel exchange
 
 

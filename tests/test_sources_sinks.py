@@ -203,6 +203,37 @@ def test_textkv_writer_abort_leaves_no_staging(spark, tmp_path):
     assert leftovers == []
 
 
+def test_textkv_writer_straggler_after_abort_writes_nothing(tmp_path, monkeypatch):
+    """A task of an aborted job that reaches its write after ``abort``
+    (a straggler) finds the driver-made staging dir gone: it fails and
+    leaves no staging dir behind."""
+    import os
+
+    import pyarrow as pa
+    import pytest as _pytest
+    from pyspark import TaskContext
+
+    from hadoopmapreduce_spark.sources.textkv_source import TextKVWriter
+
+    class _Task:
+        def partitionId(self):
+            return 0
+
+        def taskAttemptId(self):
+            return 7
+
+    monkeypatch.setattr(TaskContext, "get", classmethod(lambda cls: _Task()))
+    out = tmp_path / "kvstraggler"
+    w = TextKVWriter({"path": str(out)}, True)
+    w.abort([])
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["k"]), pa.array(["v"])], names=["key", "value"]
+    )
+    with _pytest.raises(FileNotFoundError):
+        w.write(iter([batch]))
+    assert [f for f in os.listdir(out) if f.startswith("_staging")] == []
+
+
 def test_textkv_writer_rejects_wrong_schema(spark, tmp_path):
     from hadoopmapreduce_spark.sources.textkv_source import register_textkv
 
